@@ -478,14 +478,17 @@ def minhash_pairs(docs: DataFrame, tau: float = JACCARD_TAU) -> DataFrame:
     of the tier is one pre-rendered SQL statement (_MH_PAIRS_TEMPLATE);
     spark.sql analyzes eagerly, so the view is dropped immediately —
     the returned DataFrame holds the resolved relation (the
-    fixpoint-runner _bind_result precedent).
+    fixpoint-runner _bind_result precedent). ``tau`` is coerced with
+    ``float`` first, so only a numeric literal reaches the SQL text and
+    a non-numeric tau raises before anything is built.
     """
+    tau = float(tau)
     toks = minhash_token_arrays(docs)
     view = f"__mh_toks_{next(_MH_VIEW_SEQ)}"
     toks.createOrReplaceTempView(view)
     spark = toks.sparkSession
     try:
-        return spark.sql(_MH_PAIRS_TEMPLATE.format(toks=view, tau=repr(tau)))
+        return spark.sql(_MH_PAIRS_TEMPLATE.format(toks=view, tau=tau))
     finally:
         spark.catalog.dropTempView(view)
 

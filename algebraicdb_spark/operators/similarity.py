@@ -68,6 +68,17 @@ def _list_matrix(arr):
     return flat.reshape(n, len(flat) // n).astype(np.float64, copy=False)
 
 
+def _row_dots(A, B):
+    """Row-wise dot products of an (n, d) float64 matrix with an (n, d)
+    matrix or a single (d,) vector: acc = (((0 + t₀) + t₁) + …), one
+    vectorized multiply-add per DIMENSION — the same IEEE float64 op
+    order per row as :func:`dot`, so the values are bit-identical."""
+    acc = np.zeros(len(A), dtype=np.float64)
+    for i in range(A.shape[1]):
+        acc = acc + A[:, i] * B[..., i]
+    return acc
+
+
 def bulk_cosine_tau_pairs(pairs, tau: float):
     """Score candidate (vec_a, vec_b, emb_a, emb_b) pairs, keep those
     with dot ≥ tau, and return (vec_a, vec_b, cosine) with cosine on
@@ -98,11 +109,9 @@ def bulk_cosine_tau_pairs(pairs, tau: float):
         for b in batches:
             if b.num_rows == 0:
                 continue
-            A = _list_matrix(b.column("emb_a"))
-            B = _list_matrix(b.column("emb_b"))
-            acc = np.zeros(b.num_rows, dtype=np.float64)
-            for i in range(A.shape[1]):
-                acc = acc + A[:, i] * B[:, i]
+            acc = _row_dots(
+                _list_matrix(b.column("emb_a")), _list_matrix(b.column("emb_b"))
+            )
             mask = acc >= tau
             if not mask.any():
                 continue
@@ -1252,6 +1261,75 @@ def _mmr_oracle() -> str:
     return "WITH " + ",".join(ctes) + " " + picks
 
 
+def _spark_floor_bigint(x):
+    """Spark's ``CAST(FLOOR(x) AS BIGINT)`` on a float64 array: FLOOR
+    of a DOUBLE is ``(long) Math.floor(x)``, which sends NaN to 0 and
+    saturates ±∞ and out-of-range values at the BIGINT bounds. numpy's
+    ``astype(np.int64)`` gives −2⁶³ for all three, so they are mapped
+    explicitly."""
+    f = np.floor(x)
+    hi = f >= 2.0**63
+    lo = f < -(2.0**63)
+    out = np.where(hi | lo | np.isnan(f), 0.0, f).astype(np.int64)
+    out[hi] = np.iinfo(np.int64).max
+    out[lo] = np.iinfo(np.int64).min
+    return out
+
+
+def _mmr_page(batches):
+    """mapInArrow body of :func:`sim_mmr_diversify`: all K greedy
+    rounds over one (vec_id, embedding) page, yielding up to MMR_K
+    (rank, vec_id, rel) rows — min(K, n−1), or none when the page has
+    no query vector (vec_id 0), exactly as the oracle.
+
+    Each similarity is the :func:`dot` fold, grid-floored the way
+    Spark's ``CAST(FLOOR(x * 1e6) AS BIGINT)`` does it; each score is
+    the Spark double ``λ·rel_g − (1−λ)·ms_g``; the argmax breaks ties
+    by the lower vec_id, as ``ORDER BY score DESC, vec_id`` does."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    batches = list(batches)
+    if not batches:
+        return
+    page = pa.Table.from_batches(batches)
+    page = page.filter(pc.is_valid(page.column("vec_id")))
+    ids = page.column("vec_id").to_numpy()
+    is_q = ids == 0
+    if not is_q.any():
+        return
+    E = _list_matrix(page.column("embedding").combine_chunks())
+    q = E[np.flatnonzero(is_q)[0]]
+    C, cid = E[~is_q], ids[~is_q]
+    rel_g = _spark_floor_bigint(_row_dots(C, q) * _MMR_GRID)
+    ms_g = np.full(len(cid), _MMR_MS_INIT, dtype=np.int64)
+    rel_s = MMR_LAMBDA * rel_g.astype(np.float64)
+    ms_w = round(1 - MMR_LAMBDA, 10)
+    alive = np.ones(len(cid), dtype=bool)
+    picks = []
+    for rank in range(1, MMR_K + 1):
+        live = np.flatnonzero(alive)
+        if not len(live):
+            break
+        score = rel_s[live] - ms_w * ms_g[live].astype(np.float64)
+        tied = live[score == score.max()]
+        p = tied[np.argmin(cid[tied])]
+        picks.append((rank, int(cid[p]), int(rel_g[p]) / _MMR_GRID))
+        alive &= cid != cid[p]
+        sim_g = _spark_floor_bigint(_row_dots(C, C[p]) * _MMR_GRID)
+        ms_g = np.maximum(ms_g, sim_g)
+    if picks:
+        rank, vec_id, rel = zip(*picks)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(rank, pa.int64()),
+                pa.array(vec_id, pa.int64()),
+                pa.array(rel, pa.float64()),
+            ],
+            ["rank", "vec_id", "rel"],
+        )
+
+
 @register("sim_mmr_diversify", oracle=_mmr_oracle())
 def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance (Carbonell & Goldstein '98): greedy
@@ -1267,72 +1345,19 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays all K rounds as unrolled MATERIALIZED CTEs.
 
     Scale shape: greedy MMR is sequential in k BY DEFINITION — the
-    round-i pick depends on rounds 1..i−1. Each round is one map
-    (fold the 1 picked vector into the running max via a broadcast
-    literal) + one TakeOrderedAndProject argmax over candidates;
-    the 1-row pick collect per round is the CC-probe discipline
-    (k = 10 constant, data-size-independent). At 100 TB you first
-    cut candidates to a few hundred with sim_knn_* (ANN), then run
-    MMR on that page — k·|page| work, never k·|corpus|.
+    round-i pick depends on rounds 1..i−1 — so all K rounds run in ONE
+    Arrow task over the candidate page (:func:`_mmr_page`) instead of
+    one driver collect per round: the build submits no job and each
+    action runs one. The page must fit one task: N × d float64, 1 MB
+    at sf0.1's 2,000 × 64. At 100 TB you first cut candidates to a
+    few hundred with sim_knn_* (ANN), then run MMR on that page —
+    k·|page| work, never k·|corpus|.
     """
     e = load_tables(spark, sf_dir)["embeddings"]
-    q_emb = e.where(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_emb")
-    )
-    cands = (
-        e.where(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q_emb))
-        .select(
-            "vec_id",
-            F.col("embedding").alias("emb"),
-            F.floor(dot(F.col("q_emb"), F.col("embedding")) * _MMR_GRID)
-            .cast("bigint")
-            .alias("rel_g"),
-            F.lit(_MMR_MS_INIT).cast("bigint").alias("ms_g"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    score = (
-        F.lit(MMR_LAMBDA) * F.col("rel_g")
-        - F.lit(round(1 - MMR_LAMBDA, 10)) * F.col("ms_g")
-    )
-    picks = []
-    for rank in range(1, MMR_K + 1):
-        top = (
-            cands.orderBy(score.desc(), F.col("vec_id"))
-            .limit(1)
-            .collect()[0]
-        )  # 1-row argmax probe per round; k is a constant
-        picks.append((rank, top["vec_id"], top["rel_g"] / _MMR_GRID))
-        # ONE pre-rendered SQL string per round (round 14, the dot()
-        # note applied): the Column form built the 64-element pick
-        # vector as 65 py4j calls + a lambda fold per round — ~1.4 s
-        # of driver socket latency across k=10 rounds. The expression
-        # tree is unchanged (same zip_with/aggregate fold, same
-        # double literals via exact repr round-trip), so the grid
-        # floor — and the oracle hash — are bit-identical.
-        pick_vec_sql = (
-            "array(" + ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in top["emb"]) + ")"
-        )
-        fold_sql = (
-            f"aggregate(zip_with(emb, {pick_vec_sql}, "
-            "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            "CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-        cands = cands.where(F.col("vec_id") != top["vec_id"]).selectExpr(
-            "vec_id",
-            "emb",
-            "rel_g",
-            f"GREATEST(ms_g, CAST(FLOOR({fold_sql} * {_MMR_GRID}) AS BIGINT)) AS ms_g",
-        )
-        if rank % 3 == 0:
-            cands = cands.localCheckpoint(eager=True)
-    # one explicit slice for the k-row result (see pagerank_exact's
-    # driver-tier note: bare createDataFrame pickles into
-    # defaultParallelism worker spin-ups; coalesce(1) is 10× worse)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(picks, 1),
-        "rank bigint, vec_id bigint, rel double",
+    return (
+        e.select("vec_id", "embedding")
+        .coalesce(1)
+        .mapInArrow(_mmr_page, "rank bigint, vec_id bigint, rel double")
     )
 
 

@@ -105,3 +105,31 @@ def test_df_cap_keeps_recall(spark, sf_dir, tables):
     n_uncapped = jaccard_candidate_pairs(docs).count()
     n_capped = jaccard_candidate_pairs(docs, max_df=5).count()
     assert n_capped < n_uncapped  # the cap actually prunes work
+
+
+def _views(spark, prefix):
+    return {t.name for t in spark.catalog.listTables() if t.name.startswith(prefix)}
+
+
+def test_minhash_pairs_rejects_non_numeric_tau(spark, tables):
+    """tau is coerced with float() before anything is built, so only a
+    numeric literal can reach the SQL text."""
+    from algebraicdb_spark.operators.dedup import minhash_pairs
+
+    with pytest.raises(ValueError):
+        minhash_pairs(tables["documents"], tau="0.5 OR 1 = 1")
+    assert not _views(spark, "__mh_toks_")
+
+
+def test_dedup_funnel_leaks_no_view_when_minhash_raises(spark, sf_dir, tables, monkeypatch):
+    """A failing near-dup tier leaves the session catalog as it was:
+    neither __funnel_* view survives."""
+    from algebraicdb_spark.operators import pipeline
+
+    def boom(*_a, **_k):
+        raise RuntimeError("minhash tier failed")
+
+    monkeypatch.setattr(pipeline, "minhash_pairs", boom)
+    with pytest.raises(RuntimeError, match="minhash tier failed"):
+        pipeline.pipeline_dedup_funnel(spark, sf_dir)
+    assert not _views(spark, "__funnel_")

@@ -149,6 +149,175 @@ def test_mmr_diversifies_vs_pure_topk(spark, sf_dir):
     assert all(-1.0 <= r["rel"] <= 1.0 + 1e-9 for r in picks)
 
 
+# --- greedy MMR page function (the one Arrow task behind the key) ---
+
+_I64_MAX, _I64_MIN = 2**63 - 1, -(2**63)
+
+
+def _page(rows, chunks=1):
+    """Hand-built (vec_id, embedding list<float>) Arrow batches."""
+    import pyarrow as pa
+
+    ids = [r[0] for r in rows]
+    embs = pa.array([r[1] for r in rows], pa.list_(pa.float32()))
+    step = max(1, -(-len(rows) // chunks))
+    return [
+        pa.RecordBatch.from_arrays(
+            [pa.array(ids[i : i + step], pa.int64()), embs[i : i + step]],
+            ["vec_id", "embedding"],
+        )
+        for i in range(0, len(rows), step)
+    ]
+
+
+def _mmr_rows(batches):
+    from algebraicdb_spark.operators.similarity import _mmr_page
+
+    return [
+        row
+        for b in _mmr_page(iter(batches))
+        for row in zip(*(b.column(c).to_pylist() for c in ("rank", "vec_id", "rel")))
+    ]
+
+
+def test_mmr_floor_maps_non_finite_like_spark():
+    """Spark's CAST(FLOOR(x) AS BIGINT): NaN→0, ±∞ and out-of-range
+    saturate at the BIGINT bounds (numpy's astype gives −2⁶³ for all)."""
+    import numpy as np
+
+    from algebraicdb_spark.operators.similarity import _spark_floor_bigint
+
+    x = np.array(
+        [np.nan, np.inf, -np.inf, 2.0**63, 2.0**64, -(2.0**63), -(2.0**64), 1.5, -1.5, -0.0]
+    )
+    assert _spark_floor_bigint(x).tolist() == [
+        0, _I64_MAX, _I64_MIN, _I64_MAX, _I64_MAX, _I64_MIN, _I64_MIN, 1, -2, 0
+    ]
+
+
+def test_mmr_page_non_finite_dots():
+    """Non-finite dots go through the Spark BIGINT mapping into both
+    the relevance and the running max-similarity: +∞ relevance wins
+    round 1, the NaN candidate (rel 0, ms 0 after the +∞ pick) beats
+    the −∞ one, and the reported rel keeps the saturated grid value."""
+    inf, nan = float("inf"), float("nan")
+    page = [(0, [1.0, 0.0]), (1, [inf, 0.0]), (2, [-inf, 0.0]), (3, [nan, 0.0])]
+    assert _mmr_rows(_page(page)) == [
+        (1, 1, _I64_MAX / 10**6),
+        (2, 3, 0.0),
+        (3, 2, _I64_MIN / 10**6),
+    ]
+
+
+def test_mmr_page_ties_pick_lower_vec_id_and_picks_are_distinct():
+    """Equal scores pick the lower vec_id; duplicated vectors are
+    still picked once each; the query vector is never picked."""
+    q = [0.6, 0.8]
+    page = [(7, q), (0, q), (3, q), (5, [0.8, -0.6]), (9, [0.8, -0.6]), (4, q)]
+    rows = _mmr_rows(_page(page))
+    # 3, 4, 7 tie on every score they are compared on, as do 5 and 9
+    assert [r[1] for r in rows] == [3, 4, 7, 5, 9]
+    assert [r[0] for r in rows] == [1, 2, 3, 4, 5]
+    assert rows[0][2] == rows[1][2] == rows[2][2]
+
+
+def test_mmr_page_is_batching_independent():
+    """The page may arrive as several Arrow batches; the picks are
+    the same as from one batch, and K distinct ids come back."""
+    import numpy as np
+
+    from algebraicdb_spark.operators.similarity import MMR_K
+
+    rng = np.random.default_rng(7)
+    v = rng.standard_normal((40, 8)).astype(np.float32)
+    v /= np.linalg.norm(v, axis=1, keepdims=True)
+    page = [(i, v[i].tolist()) for i in range(40)] + [(40, v[3].tolist())]
+    one = _mmr_rows(_page(page))
+    assert one == _mmr_rows(_page(page, chunks=3))
+    ids = [r[1] for r in one]
+    assert len(ids) == MMR_K == len(set(ids)) and 0 not in ids
+
+
+def _mmr_oracle_rows(page):
+    """The registered DuckDB oracle run over a hand-built page."""
+    import duckdb
+    import pyarrow as pa
+
+    from algebraicdb_spark.operators.similarity import _mmr_oracle
+
+    con = duckdb.connect()
+    embeddings = pa.Table.from_batches(_page(page))  # noqa: F841 (scanned by name)
+    return [tuple(r) for r in con.execute(_mmr_oracle() + " ORDER BY rank").fetchall()]
+
+
+@pytest.mark.parametrize(
+    "page",
+    [
+        [(0, [1.0, 0.0]), (1, [0.6, 0.8]), (2, [0.0, 1.0]), (3, [-1.0, 0.0])],
+        [(1, [0.6, 0.8]), (2, [0.0, 1.0]), (3, [1.0, 0.0])],
+    ],
+    ids=["four_vectors", "no_query_id"],
+)
+def test_mmr_small_pages_match_oracle(spark, page):
+    """A page with at most MMR_K candidates, or without vec_id 0,
+    returns what the oracle returns — min(K, n−1) rows, or none —
+    through the same mapInArrow the key runs."""
+    from algebraicdb_spark.operators.similarity import _mmr_page
+
+    df = spark.createDataFrame(page, "vec_id bigint, embedding array<float>")
+    got = [
+        tuple(r)
+        for r in df.coalesce(1)
+        .mapInArrow(_mmr_page, "rank bigint, vec_id bigint, rel double")
+        .collect()
+    ]
+    assert got == _mmr_oracle_rows(page)
+    assert len(got) == (len(page) - 1 if any(i == 0 for i, _ in page) else 0)
+
+
+def test_mmr_build_runs_no_job_and_one_action_runs_one(spark, sf_dir, tables):
+    """Load-independent counter guard: building sim_mmr_diversify
+    submits no Spark job, and one noop write of it submits exactly one
+    (the former driver loop ran 15 jobs in the build)."""
+    from algebraicdb_spark.operators.similarity import sim_mmr_diversify
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def jobs(group):
+        bus.waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        sc.setJobGroup("guard:mmr:build", "sim_mmr_diversify build")
+        df = sim_mmr_diversify(spark, sf_dir)
+        assert jobs("guard:mmr:build") == 0
+        sc.setJobGroup("guard:mmr:write", "sim_mmr_diversify noop write")
+        df.write.format("noop").mode("overwrite").save()
+        assert jobs("guard:mmr:write") == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_spark_floor_bigint_matches_this_spark(spark):
+    """The numpy twin agrees with the installed Spark on the traps."""
+    import numpy as np
+
+    from algebraicdb_spark.operators.similarity import _spark_floor_bigint
+
+    vals = ["NaN", "Infinity", "-Infinity", "1e19", "-1e19", "2.5", "-2.5"]
+    row = spark.sql(
+        "SELECT "
+        + ", ".join(
+            f"CAST(FLOOR(CAST('{v}' AS DOUBLE) * 1000000) AS BIGINT) AS c{i}"
+            for i, v in enumerate(vals)
+        )
+    ).first()
+    x = np.array([float(v) for v in vals]) * 1_000_000
+    assert list(row) == _spark_floor_bigint(x).tolist()
+
+
 def test_int8_recall_at_5(spark, sf_dir, exact):
     """Per-vector affine int8 keeps ~8 bits of per-dimension signal —
     the quantized top-5 should recover nearly all exact neighbors
