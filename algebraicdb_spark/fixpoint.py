@@ -282,64 +282,63 @@ def _run_recursive(spark, stmt, ctes, final, saved, rewrite) -> DataFrame:
             sql = _substitute(sql, orig, v)
         return sql
 
-    for c in prefix:
-        pview = _fresh_view(c.name)
-        pdf = run(_rebind(c.body))
-        if c.cols:
-            pdf = pdf.toDF(*c.cols)
-        pdf.localCheckpoint(eager=True).createOrReplaceTempView(pview)
-        prefix_views.append((c.name, pview))
-    base_segs = [_rebind(s) for s in base_segs]
-    step_segs = [_rebind(s) for s in step_segs]
-    suffix = [_Cte(c.name, c.cols, _rebind(c.body)) for c in suffix]
-    final = _rebind(final)
-
-    acc = run(" UNION ".join(base_segs))
-    if cte.cols:
-        acc = acc.toDF(*cte.cols)
-    acc = acc.distinct().localCheckpoint(eager=True)
-    # semi-naive is sound only when each step references the name once:
-    # a self-join step needs delta×old pairs the delta view can't see
-    semi_naive = all(_refs(s, cte.name) == 1 for s in step_segs)
-    delta = acc
-    converged = False
-    for _ in range(limit):
-        (delta if semi_naive else acc).createOrReplaceTempView(view)
-        new = None
-        for seg in step_segs:
-            part = run(_substitute(seg, cte.name, view))
-            if cte.cols:
-                part = part.toDF(*cte.cols)
-            new = part if new is None else new.unionByName(part)
-        # EXCEPT DISTINCT (null-safe set difference): rows already in
-        # the accumulator die here, so acc grows strictly or we stop.
-        # What runs where: under AQE (on by default) the lazy
-        # localCheckpoint call already executes the adaptive plan, so
-        # every shuffle/broadcast stage of the step runs as its own
-        # job(s) HERE, during the call; only the final stage is left
-        # for count(), whose job(s) compute the checkpoint blocks and
-        # the row count together. That drops the former separate
-        # isEmpty probe scan, not the step's exchange jobs.
-        delta = _rebase(new.subtract(acc)).localCheckpoint(eager=False)
-        if delta.count() == 0:
-            converged = True
-            break
-        # the accumulator stays a flat union of checkpointed deltas —
-        # O(rounds) plan leaves, each an in-memory RDD scan
-        acc = _rebase(acc.unionByName(delta))
-    spark.catalog.dropTempView(view)
-    if not converged:
-        raise AdtError(
-            f"WITH RECURSIVE {cte.name}: no fixpoint within {limit} "
-            "iterations (spark.sql.cteRecursionLevelLimit) — raise the "
-            "limit or check the step for non-terminating generation"
-        )
-    # prefix CTE references in suffix/final are already rebound to the
-    # materialized views, so the final statement needs no WITH prefix
     try:
+        for c in prefix:
+            pview = _fresh_view(c.name)
+            pdf = run(_rebind(c.body))
+            if c.cols:
+                pdf = pdf.toDF(*c.cols)
+            pdf.localCheckpoint(eager=True).createOrReplaceTempView(pview)
+            prefix_views.append((c.name, pview))
+        base_segs = [_rebind(s) for s in base_segs]
+        step_segs = [_rebind(s) for s in step_segs]
+        suffix = [_Cte(c.name, c.cols, _rebind(c.body)) for c in suffix]
+        final = _rebind(final)
+
+        acc = run(" UNION ".join(base_segs))
+        if cte.cols:
+            acc = acc.toDF(*cte.cols)
+        acc = acc.distinct().localCheckpoint(eager=True)
+        # semi-naive is sound only when each step references the name once:
+        # a self-join step needs delta×old pairs the delta view can't see
+        semi_naive = all(_refs(s, cte.name) == 1 for s in step_segs)
+        delta = acc
+        converged = False
+        for _ in range(limit):
+            (delta if semi_naive else acc).createOrReplaceTempView(view)
+            new = None
+            for seg in step_segs:
+                part = run(_substitute(seg, cte.name, view))
+                if cte.cols:
+                    part = part.toDF(*cte.cols)
+                new = part if new is None else new.unionByName(part)
+            # EXCEPT DISTINCT (null-safe set difference): rows already in
+            # the accumulator die here, so acc grows strictly or we stop.
+            # What runs where: under AQE (on by default) the lazy
+            # localCheckpoint call already executes the adaptive plan, so
+            # every shuffle/broadcast stage of the step runs as its own
+            # job(s) HERE, during the call; only the final stage is left
+            # for count(), whose job(s) compute the checkpoint blocks and
+            # the row count together. That drops the former separate
+            # isEmpty probe scan, not the step's exchange jobs.
+            delta = _rebase(new.subtract(acc)).localCheckpoint(eager=False)
+            if delta.count() == 0:
+                converged = True
+                break
+            # the accumulator stays a flat union of checkpointed deltas —
+            # O(rounds) plan leaves, each an in-memory RDD scan
+            acc = _rebase(acc.unionByName(delta))
+        if not converged:
+            raise AdtError(
+                f"WITH RECURSIVE {cte.name}: no fixpoint within {limit} "
+                "iterations (spark.sql.cteRecursionLevelLimit) — raise the "
+                "limit or check the step for non-terminating generation"
+            )
+        # prefix CTE references in suffix/final are already rebound to the
+        # materialized views, so the final statement needs no WITH prefix
         return _bind_result(spark, acc, cte, [], suffix, final, saved, rewrite)
     finally:
-        for _, v in prefix_views:
+        for v in [view] + [pv for _, pv in prefix_views]:
             spark.catalog.dropTempView(v)
 
 
@@ -391,48 +390,50 @@ def _run_iterate(spark, ctes, final, saved, rewrite) -> DataFrame:
     view = _fresh_view(cte.name)
     run = lambda sql: spark.sql(rewrite(_unmask_strings(sql, saved)))  # noqa: E731
 
-    state = run(base_sql)
-    if cte.cols:
-        state = state.toDF(*cte.cols)
-    # lazy ckpt + count: the checkpoint call runs the base query's
-    # exchange stages (under AQE), and count() computes the
-    # checkpoint blocks AND seeds the count tier of the convergence
-    # probe (same split as the per-round probe below)
-    state = state.localCheckpoint(eager=False)
-    converged = False
-    prev_count = state.count()
-    for _ in range(limit):
-        state.createOrReplaceTempView(view)
-        nxt = run(_substitute(step_sql, cte.name, view))
+    try:
+        state = run(base_sql)
         if cte.cols:
-            nxt = nxt.toDF(*cte.cols)
-        # Lazy checkpoint + count. Under AQE the localCheckpoint call
-        # itself runs the step's shuffle/broadcast stages as jobs
-        # (warm dialect_iterate_kcore at sf0.1, 4 cores: the 3 calls
-        # took 2.5 s of 4.4 s, the 3 counts 0.9 s); count() then runs
-        # the final stage, computing the checkpoint blocks and the
-        # first convergence tier together (the former eager ckpt
-        # re-scanned the blocks in a separate count job).
-        nxt = _rebase(nxt).localCheckpoint(eager=False)
-        # two-tier convergence probe: counts first (unequal counts
-        # prove inequality, which is the common case while a
-        # peel/propagation still moves), then the single-job null-safe
-        # set-equality probe only on count equality (state is a SET
-        # here; multiset-sensitive steps should key their state)
-        n = nxt.count()
-        if n == prev_count and _set_equal(nxt, state):
-            converged = True
-            break
-        prev_count = n
-        state = nxt
-    spark.catalog.dropTempView(view)
-    if not converged and not explicit_max:
-        raise AdtError(
-            f"WITH ITERATE {cte.name}: no fixpoint within {limit} "
-            "iterations — give an explicit MAX n for bounded-round "
-            "semantics or raise spark.sql.cteRecursionLevelLimit"
-        )
-    return _bind_result(spark, state, cte, [], suffix, final, saved, rewrite)
+            state = state.toDF(*cte.cols)
+        # lazy ckpt + count: the checkpoint call runs the base query's
+        # exchange stages (under AQE), and count() computes the
+        # checkpoint blocks AND seeds the count tier of the convergence
+        # probe (same split as the per-round probe below)
+        state = state.localCheckpoint(eager=False)
+        converged = False
+        prev_count = state.count()
+        for _ in range(limit):
+            state.createOrReplaceTempView(view)
+            nxt = run(_substitute(step_sql, cte.name, view))
+            if cte.cols:
+                nxt = nxt.toDF(*cte.cols)
+            # Lazy checkpoint + count. Under AQE the localCheckpoint call
+            # itself runs the step's shuffle/broadcast stages as jobs
+            # (warm dialect_iterate_kcore at sf0.1, 4 cores: the 3 calls
+            # took 2.5 s of 4.4 s, the 3 counts 0.9 s); count() then runs
+            # the final stage, computing the checkpoint blocks and the
+            # first convergence tier together (the former eager ckpt
+            # re-scanned the blocks in a separate count job).
+            nxt = _rebase(nxt).localCheckpoint(eager=False)
+            # two-tier convergence probe: counts first (unequal counts
+            # prove inequality, which is the common case while a
+            # peel/propagation still moves), then the single-job null-safe
+            # set-equality probe only on count equality (state is a SET
+            # here; multiset-sensitive steps should key their state)
+            n = nxt.count()
+            if n == prev_count and _set_equal(nxt, state):
+                converged = True
+                break
+            prev_count = n
+            state = nxt
+        if not converged and not explicit_max:
+            raise AdtError(
+                f"WITH ITERATE {cte.name}: no fixpoint within {limit} "
+                "iterations — give an explicit MAX n for bounded-round "
+                "semantics or raise spark.sql.cteRecursionLevelLimit"
+            )
+        return _bind_result(spark, state, cte, [], suffix, final, saved, rewrite)
+    finally:
+        spark.catalog.dropTempView(view)
 
 
 def _bind_result(spark, df, cte, prefix, suffix, final, saved, rewrite) -> DataFrame:

@@ -4,6 +4,7 @@ INSERT / DROP TABLE / SELECT with pattern matching, end to end."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from algebraicdb_spark.dialect import parse_create_type, rewrite_patterns
 from algebraicdb_spark.engine import Engine
@@ -1383,6 +1384,10 @@ class TestDecimalInterval:
         eng3.sql("DROP TABLE dl_cat")
 
 
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
 class TestRecursive:
     """WITH RECURSIVE: UNION ALL runs natively (one Catalyst plan);
     UNION distinct lowers to the semi-naive set fixpoint Spark can't
@@ -1500,6 +1505,24 @@ class TestRecursive:
             == before
         )
 
+    def test_failing_step_leaks_no_view(self, spark):
+        # the prefix CTE is materialized as a view and the loop view is
+        # bound before the step fails analysis; both must be dropped
+        before = _temp_views(spark)
+        with pytest.raises(AnalysisException, match="no_such_col"):
+            Engine(spark).sql(
+                """
+                WITH RECURSIVE seed(n) AS (SELECT 1),
+                w(n) AS (
+                  SELECT n FROM seed
+                  UNION
+                  SELECT no_such_col + 1 FROM w WHERE n < 3
+                )
+                SELECT * FROM w
+                """
+            )
+        assert _temp_views(spark) == before
+
     def test_params_refused(self, spark):
         with pytest.raises(AdtError, match="parameters"):
             Engine(spark).sql(
@@ -1543,6 +1566,15 @@ class TestIterate:
                 )
         finally:
             spark.conf.unset("spark.sql.cteRecursionLevelLimit")
+
+    def test_failing_step_leaks_no_view(self, spark):
+        before = _temp_views(spark)
+        with pytest.raises(AnalysisException, match="no_such_col"):
+            Engine(spark).sql(
+                "WITH ITERATE s(v) AS (SELECT 1 AS v "
+                "STEP SELECT no_such_col AS v FROM s) SELECT * FROM s"
+            )
+        assert _temp_views(spark) == before
 
     def test_step_must_reference_state(self, spark):
         with pytest.raises(AdtError, match="must reference"):

@@ -2,7 +2,7 @@
 
 Methodology mirrors the multimodal codecs: the test WRITES Avro
 object-container bytes through a hardcoded, schema-specific encoder
-below, and the engine reads them back through its independent
+(tests/test_avro.py), and the engine reads them back through its independent
 schema-DRIVEN decoder — two code paths that only agree if both match
 the public Avro spec. The Iceberg layout (metadata JSON, manifest
 list, manifests, statuses, time travel) follows the public spec at
@@ -14,7 +14,6 @@ full 30-field production manifest.
 import json
 import os
 import struct
-import zlib
 
 import pytest
 
@@ -25,91 +24,7 @@ pytestmark = pytest.mark.interop
 from pyspark.sql import functions as F
 
 from algebraicdb_spark.operators.iceberg import AvroFileReader, IcebergTable
-
-SYNC = b"\xde\xad\xbe\xef" * 4
-
-
-def zz(n: int) -> bytes:
-    """Zigzag + varint encode (Avro int/long wire form)."""
-    u = (n << 1) ^ (n >> 63)
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def av_bytes(b: bytes) -> bytes:
-    return zz(len(b)) + b
-
-
-def leb128(n: int) -> bytes:
-    """Plain unsigned varint (snappy's length header — NOT zigzag)."""
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def snappy_literals(data: bytes) -> bytes:
-    """A valid snappy stream using only LITERAL tags — a legal
-    encoding of any input per the format spec, hand-built so fixture
-    compression never touches the decoder under test."""
-    out = bytearray(leb128(len(data)))
-    pos = 0
-    while pos < len(data):
-        chunk = data[pos:pos + 50]
-        pos += len(chunk)
-        out.append((len(chunk) - 1) << 2)  # literal, len ≤ 60 inline
-        out += chunk
-    return bytes(out)
-
-
-def av_str(s: str) -> bytes:
-    return av_bytes(s.encode("utf-8"))
-
-
-def avro_container(
-    schema: dict, record_bufs: list[bytes], codec: str = "null"
-) -> bytes:
-    """One-block Avro object-container file around pre-encoded records."""
-    meta = (
-        zz(2)
-        + av_str("avro.schema")
-        + av_bytes(json.dumps(schema).encode())
-        + av_str("avro.codec")
-        + av_bytes(codec.encode())
-        + zz(0)
-    )
-    payload = b"".join(record_bufs)
-    if codec == "deflate":
-        c = zlib.compressobj(9, zlib.DEFLATED, -15)
-        payload = c.compress(payload) + c.flush()
-    elif codec == "snappy":
-        # hand-built snappy stream (literal tags only — spec-legal,
-        # and independent of the reader's decoder) + the Avro codec's
-        # big-endian crc32-of-uncompressed trailer
-        payload = snappy_literals(payload) + zlib.crc32(
-            payload
-        ).to_bytes(4, "big")
-    return (
-        b"Obj\x01"
-        + meta
-        + SYNC
-        + zz(len(record_bufs))
-        + zz(len(payload))
-        + payload
-        + SYNC
-    )
+from tests.test_avro import av_str, avro_container, zz
 
 
 # ---- minimal Iceberg manifest schemas (field subset of the spec) ----
@@ -178,179 +93,6 @@ def write_parquet_file(spark, df, dest: str) -> int:
     part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
     os.replace(os.path.join(tmp, part), dest)
     return df.count()
-
-
-class TestAvroDecoder:
-    def test_all_types_roundtrip_hand_encoded(self, tmp_path):
-        """Every Avro type the decoder claims, against hand-laid bytes:
-        record, union, array (incl. the negative-count skippable block
-        form), map, enum, fixed, all primitives."""
-        schema = {
-            "type": "record",
-            "name": "t",
-            "fields": [
-                {"name": "b", "type": "boolean"},
-                {"name": "i", "type": "int"},
-                {"name": "l", "type": "long"},
-                {"name": "f", "type": "float"},
-                {"name": "d", "type": "double"},
-                {"name": "s", "type": "string"},
-                {"name": "by", "type": "bytes"},
-                {"name": "u", "type": ["null", "string"]},
-                {"name": "arr", "type": {"type": "array", "items": "long"}},
-                {"name": "m", "type": {"type": "map", "values": "int"}},
-                {
-                    "name": "e",
-                    "type": {"type": "enum", "name": "col",
-                             "symbols": ["RED", "GREEN"]},
-                },
-                {
-                    "name": "fx",
-                    "type": {"type": "fixed", "name": "f4", "size": 4},
-                },
-                {
-                    "name": "ts",
-                    "type": {"type": "long",
-                             "logicalType": "timestamp-micros"},
-                },
-            ],
-        }
-        rec = (
-            b"\x01"  # true
-            + zz(-7)
-            + zz(2**40 + 3)
-            + struct.pack("<f", 1.5)
-            + struct.pack("<d", -2.25)
-            + av_str("héllo")
-            + av_bytes(b"\x00\xff")
-            + zz(1) + av_str("set")  # union branch 1
-            # array in two blocks, second in negative-count form
-            + zz(2) + zz(10) + zz(20)
-            + zz(-1) + zz(len(zz(30))) + zz(30)
-            + zz(0)
-            + zz(1) + av_str("k") + zz(42) + zz(0)
-            + zz(1)  # GREEN
-            + b"ABCD"
-            + zz(123456789)
-        )
-        p = tmp_path / "t.avro"
-        p.write_bytes(avro_container(schema, [rec, rec]))
-        rows = AvroFileReader(str(p)).records
-        assert len(rows) == 2
-        r = rows[0]
-        assert r["b"] is True and r["i"] == -7 and r["l"] == 2**40 + 3
-        assert r["f"] == 1.5 and r["d"] == -2.25
-        assert r["s"] == "héllo" and r["by"] == b"\x00\xff"
-        assert r["u"] == "set"
-        assert r["arr"] == [10, 20, 30]
-        assert r["m"] == {"k": 42}
-        assert r["e"] == "GREEN" and r["fx"] == b"ABCD"
-        assert r["ts"] == 123456789
-
-    def test_deflate_codec_and_corruption_refusals(self, tmp_path):
-        schema = {"type": "record", "name": "r",
-                  "fields": [{"name": "x", "type": "long"}]}
-        p = tmp_path / "d.avro"
-        p.write_bytes(avro_container(schema, [zz(5), zz(6)], codec="deflate"))
-        assert [r["x"] for r in AvroFileReader(str(p)).records] == [5, 6]
-        # bad magic
-        bad = tmp_path / "bad.avro"
-        bad.write_bytes(b"PAR1" + b"\x00" * 32)
-        with pytest.raises(ValueError, match="not an avro"):
-            AvroFileReader(str(bad))
-        # flipped sync marker
-        buf = bytearray(avro_container(schema, [zz(5)]))
-        buf[-1] ^= 0xFF
-        (tmp_path / "sync.avro").write_bytes(bytes(buf))
-        with pytest.raises(ValueError, match="sync marker"):
-            AvroFileReader(str(tmp_path / "sync.avro"))
-        # zstandard graduated to supported in r13 (operators/zstd.py);
-        # the hand-swapped codec header with a REAL zstd frame as the
-        # block payload reads back — while an unknown codec refuses
-        import pyarrow as pa
-
-        block = zz(5)
-        comp = pa.Codec("zstd").compress(block, asbytes=True)
-        s = avro_container(schema, [zz(5)], codec="null")
-        s = s.replace(
-            av_str("avro.codec") + av_bytes(b"null"),
-            av_str("avro.codec") + av_bytes(b"zstandard"),
-        ).replace(
-            zz(1) + zz(len(block)) + block,
-            zz(1) + zz(len(comp)) + comp,
-        )
-        (tmp_path / "zs.avro").write_bytes(s)
-        assert [r["x"] for r in AvroFileReader(
-            str(tmp_path / "zs.avro")).records] == [5]
-        lz = avro_container(schema, [zz(5)], codec="null").replace(
-            av_str("avro.codec") + av_bytes(b"null"),
-            av_str("avro.codec") + av_bytes(b"lz4!"),
-        )
-        (tmp_path / "lz.avro").write_bytes(lz)
-        with pytest.raises(NotImplementedError, match="lz4"):
-            AvroFileReader(str(tmp_path / "lz.avro"))
-
-    def test_snappy_codec_reads_hand_written_container(self, tmp_path):
-        """Snappy is Avro's default codec in several Iceberg writers
-        (Java's manifest writer among them) — the round-12 decoder
-        reads it from a HAND-BUILT literal-tag stream that never
-        touched the decoder under test."""
-        schema = {"type": "record", "name": "r",
-                  "fields": [{"name": "x", "type": "long"},
-                             {"name": "s", "type": "string"}]}
-        p = tmp_path / "sn.avro"
-        recs = [zz(5) + av_str("hello"), zz(-7) + av_str("world" * 30)]
-        p.write_bytes(avro_container(schema, recs, codec="snappy"))
-        rows = AvroFileReader(str(p)).records
-        assert [(r["x"], len(r["s"])) for r in rows] == [(5, 5), (-7, 150)]
-
-    def test_snappy_crc_mismatch_refuses(self, tmp_path):
-        schema = {"type": "record", "name": "r",
-                  "fields": [{"name": "x", "type": "long"}]}
-        buf = bytearray(avro_container(schema, [zz(5)], codec="snappy"))
-        # the crc32 trailer sits just before the trailing sync marker
-        buf[-17] ^= 0xFF
-        (tmp_path / "crc.avro").write_bytes(bytes(buf))
-        with pytest.raises(ValueError, match="crc32"):
-            AvroFileReader(str(tmp_path / "crc.avro"))
-
-    def test_snappy_block_decoder_handles_copies(self):
-        """Back-references, including the OVERLAPPING repeat idiom
-        (offset < length), against hand-assembled tag streams with
-        independently known expansions."""
-        from algebraicdb_spark.operators.iceberg import (
-            _snappy_decompress,
-        )
-
-        # literal "abc" + copy(offset=3, len=6) → "abc" * 3
-        s = leb128(9) + bytes([(3 - 1) << 2]) + b"abc" + bytes(
-            [((6 - 4) << 2) | 0x01, 3]
-        )
-        assert _snappy_decompress(s) == b"abcabcabc"
-        # 2-byte-offset copy: 8 literals then re-emit the first 5
-        s2 = (
-            leb128(13)
-            + bytes([(8 - 1) << 2]) + b"ABCDEFGH"
-            + bytes([((5 - 1) << 2) | 0x02]) + (8).to_bytes(2, "little")
-        )
-        assert _snappy_decompress(s2) == b"ABCDEFGHABCDE"
-        # corrupt offset refuses
-        bad = leb128(4) + bytes([(1 - 1) << 2]) + b"a" + bytes(
-            [((4 - 4) << 2) | 0x01, 9]
-        )
-        with pytest.raises(ValueError, match="offset"):
-            _snappy_decompress(bad)
-        # length-header disagreement refuses
-        short = leb128(99) + bytes([(3 - 1) << 2]) + b"abc"
-        with pytest.raises(ValueError, match="header said 99"):
-            _snappy_decompress(short)
-        # a LONG literal exercises the 61-tag two-byte-length form
-        blob = bytes(range(256)) * 2
-        s3 = (
-            leb128(len(blob)) + bytes([61 << 2])
-            + (len(blob) - 1).to_bytes(2, "little") + blob
-        )
-        assert _snappy_decompress(s3) == blob
 
 
 class TestIcebergTable:

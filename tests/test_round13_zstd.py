@@ -1,27 +1,28 @@
-"""Round 13: pure-Python zstd decompression (RFC 8878) + zstd-coded
-Avro manifests.
+"""Round 13: zstd- and snappy-coded Avro manifests.
 
-Methodology mirrors the snappy decoder's (round 11): every frame the
-tests decode was produced by an INDEPENDENT real compressor — pyarrow's
-bundled libzstd and the zstd CLI at levels 1-19 — so agreement is
-evidence the decoder matches the public spec, not that it shares bugs
-with a twin. The end-to-end test recodes a real Iceberg table's Avro
-metadata to ``avro.codec: zstandard`` (what Rust/Go manifest writers
-emit) and scans it back through ``IcebergTable`` — the refusal the
-round-12 verdict listed as missing item 7 is deleted."""
+Avro ``zstandard`` blocks decode through pyarrow's bundled libzstd
+(``iceberg._zstd_decompress``). The frame tests feed it frames from
+independent producers — libzstd, the zstd CLI at levels 1-19, and a
+hand-crafted long-form sequence-count frame — and check that corrupt
+and dictionary frames refuse with ``ValueError``. The end-to-end tests
+recode a real Iceberg table's Avro metadata to ``avro.codec:
+zstandard`` (what Rust/Go manifest writers emit) or ``snappy`` (Java's
+manifest writer) and scan it back through ``IcebergTable``."""
 
 import json
 import os
 import random
 import shutil
 import subprocess
+import zlib
 
 import pyarrow as pa
 import pytest
 
-from algebraicdb_spark.operators.zstd import xxhash64, zstd_decompress
+from algebraicdb_spark.operators.iceberg import _zstd_decompress
+from tests.test_avro import zz
 
-# Three tests shell out to the standalone zstd CLI as a SECOND
+# Two tests shell out to the standalone zstd CLI as a SECOND
 # independent compressor (pyarrow's bundled libzstd is the first);
 # sandboxes without the binary still run the libzstd round-trips.
 needs_zstd_cli = pytest.mark.skipif(
@@ -31,6 +32,36 @@ needs_zstd_cli = pytest.mark.skipif(
 
 def _zc(data: bytes) -> bytes:
     return pa.Codec("zstd").compress(data, asbytes=True)
+
+
+def _craft_longform_frame() -> tuple[bytes, bytes]:
+    """A frame whose single compressed block carries 0x8000 sequences,
+    each {lit_len=1, match_len=3, offset=rep0=1} with RLE tables (no
+    FSE bits), so the only long-form-count ambiguity is the header
+    arithmetic itself."""
+    n = 0x8000
+    lits = bytes((i * 37 + 11) & 0xFF for i in range(n))
+    exp = bytearray()
+    for b in lits:
+        exp.append(b)
+        exp += bytes([b]) * 3  # match len 3 at offset 1 = 3 copies
+
+    block = bytearray()
+    block += bytes([0x0C | ((n & 0xF) << 4), (n >> 4) & 0xFF, n >> 12])
+    block += lits                       # raw literals, 20-bit size form
+    x = n - 0x7F00
+    block += bytes([255, x & 0xFF, x >> 8])   # long-form count
+    block += bytes([0x54])              # LL/OF/ML all RLE mode
+    block += bytes([1, 0, 0])           # ll_code=1, of_code=0, ml_code=0
+    block += bytes([0x01])              # backward-bitstream sentinel
+
+    frame = bytearray()
+    frame += (0xFD2FB528).to_bytes(4, "little")
+    frame += bytes([0xA0])              # single-segment, 4-byte FCS
+    frame += (131072).to_bytes(4, "little")
+    frame += (((len(block) << 3) | (2 << 1) | 1)).to_bytes(3, "little")
+    frame += block
+    return bytes(frame), bytes(exp)
 
 
 class TestZstdFrames:
@@ -48,14 +79,17 @@ class TestZstdFrames:
                 [{"k": i, "n": f"u{i % 97}"} for i in range(20000)]
             ).encode(),                           # 4-stream literals
         ]
-        for i, d in enumerate(cases):
-            assert zstd_decompress(_zc(d)) == d, f"case {i}"
+        frames = [(_zc(d), d) for d in cases]
+        # 0x8000 sequences: the count takes the long form libzstd
+        # rarely emits (RFC 8878 §3.1.1.3.2.1)
+        frames.append(_craft_longform_frame())
+        for i, (frame, d) in enumerate(frames):
+            assert _zstd_decompress(frame) == d, f"case {i}"
 
     @needs_zstd_cli
     def test_round_trips_against_the_cli_at_high_levels(self, tmp_path):
         """Level 19 exercises repeat-mode tables, treeless literals,
-        and long matches; the CLI also writes content checksums, which
-        the decoder must verify."""
+        and long matches; the CLI also writes content checksums."""
         data = (
             open("algebraicdb_spark/operators/txnlog.py", "rb").read()
             + os.urandom(1000)
@@ -68,7 +102,7 @@ class TestZstdFrames:
                 ["zstd", lvl, "-f", "-q", str(src), "-o", str(out)],
                 check=True,
             )
-            assert zstd_decompress(out.read_bytes()) == data
+            assert _zstd_decompress(out.read_bytes()) == data
 
     @needs_zstd_cli
     def test_checksum_detects_corruption(self, tmp_path):
@@ -82,7 +116,7 @@ class TestZstdFrames:
         comp = bytearray(out.read_bytes())
         comp[len(comp) // 2] ^= 0x40
         with pytest.raises(ValueError, match="zstd"):
-            zstd_decompress(bytes(comp))
+            _zstd_decompress(bytes(comp))
 
     def test_multi_frame_and_skippable(self):
         a, b = b"first frame " * 50, b"second frame " * 50
@@ -90,7 +124,7 @@ class TestZstdFrames:
             (0x184D2A50).to_bytes(4, "little")
             + (7).to_bytes(4, "little") + b"ignored"
         )
-        assert zstd_decompress(_zc(a) + skippable + _zc(b)) == a + b
+        assert _zstd_decompress(_zc(a) + skippable + _zc(b)) == a + b
 
     def test_dictionary_frames_refuse(self):
         # hand-build a frame header demanding dictionary id 7:
@@ -99,34 +133,17 @@ class TestZstdFrames:
             (0xFD2FB528).to_bytes(4, "little")
             + bytes([0x01, 0x00, 0x07])
         )
-        with pytest.raises(NotImplementedError, match="dictionary"):
-            zstd_decompress(frame)
-
-    @needs_zstd_cli
-    def test_xxhash64_against_libzstd_checksums(self, tmp_path):
-        """The canonical empty-input vector, plus the stronger check:
-        the 4-byte content checksum libzstd's CLI wrote for a frame
-        must equal this xxhash64 of the decoded content — two
-        independent implementations agreeing on real data."""
-        assert xxhash64(b"") == 0xEF46DB3751D8E999
-        data = b"Nobody inspects the spammish repetition" * 37
-        src = tmp_path / "x"
-        src.write_bytes(data)
-        out = tmp_path / "x.zst"
-        subprocess.run(
-            ["zstd", "-3", "-f", "-q", str(src), "-o", str(out)],
-            check=True,
-        )
-        comp = out.read_bytes()
-        want = int.from_bytes(comp[-4:], "little")
-        assert xxhash64(data) & 0xFFFFFFFF == want
+        with pytest.raises(ValueError, match="zstd: .*Dictionary"):
+            _zstd_decompress(frame)
 
 
-def _recode_avro_zstd(path: str, codec: bytes = b"zstandard") -> None:
+def _recode_avro(path: str, codec: bytes) -> None:
     """Rewrite an Avro object-container file in place with
     ``avro.codec: <codec>`` — byte-level surgery (magic, metadata
     map, sync, blocks) so no decoder code writes any byte the decoder
-    later reads."""
+    later reads. zstandard and snappy blocks are compressed with
+    pyarrow's codecs (snappy plus Avro's big-endian CRC32 trailer);
+    any other codec name leaves the blocks as they are."""
     raw = open(path, "rb").read()
     pos = 4
     assert raw[:4] == b"Obj\x01"
@@ -141,18 +158,6 @@ def _recode_avro_zstd(path: str, codec: bytes = b"zstandard") -> None:
                 break
             shift += 7
         return (acc >> 1) ^ -(acc & 1), p
-
-    def zz(n: int) -> bytes:
-        u = (n << 1) ^ (n >> 63)
-        out = bytearray()
-        while True:
-            b = u & 0x7F
-            u >>= 7
-            if u:
-                out.append(b | 0x80)
-            else:
-                out.append(b)
-                return bytes(out)
 
     meta = {}
     while True:
@@ -186,44 +191,52 @@ def _recode_avro_zstd(path: str, codec: bytes = b"zstandard") -> None:
         pos += n_bytes
         assert raw[pos:pos + 16] == sync
         pos += 16
-        comp = _zc(payload) if codec == b"zstandard" else payload
+        if codec == b"zstandard":
+            comp = _zc(payload)
+        elif codec == b"snappy":
+            comp = pa.Codec("snappy").compress(payload, asbytes=True)
+            comp += zlib.crc32(payload).to_bytes(4, "big")
+        else:
+            comp = payload
         out += zz(n_rec) + zz(len(comp)) + comp + sync
     with open(path, "wb") as f:
         f.write(out)
 
 
+def _scan_recoded_table(spark, root: str, codec: bytes) -> None:
+    """Write a two-commit Iceberg table, recode every Avro file of its
+    metadata (manifest lists AND manifests) to ``codec``, then scan it
+    and walk its change feed through the recoded manifests."""
+    from algebraicdb_spark.operators.iceberg import IcebergTable
+    from algebraicdb_spark.operators.iceberg_writer import IcebergTableWriter
+
+    w = IcebergTableWriter(root)
+    w.append(spark.createDataFrame(
+        [(i, float(i)) for i in range(8)], "k long, v double",
+    ).coalesce(1))
+    w.delete(spark, "k = 3")
+    recoded = 0
+    for fn in os.listdir(os.path.join(root, "metadata")):
+        if fn.endswith(".avro"):
+            _recode_avro(os.path.join(root, "metadata", fn), codec)
+            recoded += 1
+    assert recoded >= 3
+    t = IcebergTable(root)
+    snap = t.snapshot(spark)
+    assert sorted(r["k"] for r in snap.collect()) == [0, 1, 2, 4, 5, 6, 7]
+    first = t.snapshots()[0]["snapshot-id"]
+    feed = t.changes_cdf(spark, first)
+    assert sorted(
+        (r["k"], r["_change_type"]) for r in feed.collect()
+    ) == [(3, "delete")]
+
+
 class TestZstdManifests:
     def test_iceberg_table_with_zstd_metadata_scans(self, spark, tmp_path):
-        from algebraicdb_spark.operators.iceberg import IcebergTable
-        from algebraicdb_spark.operators.iceberg_writer import (
-            IcebergTableWriter,
-        )
+        _scan_recoded_table(spark, str(tmp_path / "z"), b"zstandard")
 
-        root = str(tmp_path / "z")
-        w = IcebergTableWriter(root)
-        w.append(spark.createDataFrame(
-            [(i, float(i)) for i in range(8)], "k long, v double",
-        ).coalesce(1))
-        w.delete(spark, "k = 3")
-        # recode EVERY avro in the metadata dir (manifest lists AND
-        # manifests) to the zstd codec
-        recoded = 0
-        for fn in os.listdir(os.path.join(root, "metadata")):
-            if fn.endswith(".avro"):
-                _recode_avro_zstd(os.path.join(root, "metadata", fn))
-                recoded += 1
-        assert recoded >= 3
-        t = IcebergTable(root)
-        snap = t.snapshot(spark)
-        assert sorted(r["k"] for r in snap.collect()) == [
-            0, 1, 2, 4, 5, 6, 7,
-        ]
-        # the change feed walks the same zstd-coded manifests
-        first = t.snapshots()[0]["snapshot-id"]
-        feed = t.changes_cdf(spark, first)
-        assert sorted(
-            (r["k"], r["_change_type"]) for r in feed.collect()
-        ) == [(3, "delete")]
+    def test_iceberg_table_with_snappy_metadata_scans(self, spark, tmp_path):
+        _scan_recoded_table(spark, str(tmp_path / "s"), b"snappy")
 
     def test_unknown_codec_still_refuses(self, spark, tmp_path):
         from algebraicdb_spark.operators.iceberg import AvroFileReader
@@ -234,6 +247,6 @@ class TestZstdManifests:
 
         p = str(tmp_path / "m.avro")
         AvroFileWriter.write(p, _manifest_schema([]), [])
-        _recode_avro_zstd(p, codec=b"lz4")
+        _recode_avro(p, codec=b"lz4")
         with pytest.raises(NotImplementedError, match="lz4"):
             AvroFileReader(p)
