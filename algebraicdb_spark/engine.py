@@ -127,6 +127,13 @@ _CHANGES_RE = re.compile(
 )
 
 
+def _table_format(m: re.Match) -> str:
+    """The lakehouse format an ATTACH / CREATE TABLE … FROM statement
+    names; ``txnlog`` is the dialect's second name for ``delta``."""
+    fmt = m.group("fmt").lower()
+    return "delta" if fmt == "txnlog" else fmt
+
+
 class Engine:
     """A session-scoped analytics engine over parquet tables + ADTs."""
 
@@ -178,40 +185,23 @@ class Engine:
         self, name: str, fmt: str, path: str, version: str | None
     ) -> DataFrame:
         """ATTACH TABLE n FROM txnlog|delta|iceberg LOCATION '<path>'
-        [VERSION v] — register a transactional lakehouse table (ours,
+        [VERSION v] (``fmt`` already normalized by ``_table_format``)
+        — register a transactional lakehouse table (ours,
         or one Delta/Iceberg systems maintain) as a queryable SQL
         table. The snapshot's FILE LIST is resolved at ATTACH time
         (the log/metadata fold is driver-side KBs); the data itself
         stays a lazy pruned parquet scan. Re-ATTACH to advance to new
-        commits, or pin VERSION (txnlog/delta: version; iceberg:
-        snapshot id) for a reproducible historical read — time travel
-        from the REPL."""
+        commits, or pin VERSION (delta: version; iceberg: snapshot
+        id) for a reproducible historical read — time travel from the
+        REPL."""
         from algebraicdb_spark.operators.iceberg import IcebergTable
-        from algebraicdb_spark.operators.txnlog import (
-            DeltaLogTable,
-            TxnLogTable,
-        )
+        from algebraicdb_spark.operators.txnlog import DeltaLogTable
 
-        readers = {
-            "txnlog": TxnLogTable,
-            "delta": DeltaLogTable,
-            "iceberg": IcebergTable,
-        }
-        if fmt.lower() == "txnlog" and not os.path.isdir(
-            os.path.join(path, "_log")
-        ):
-            # the writer class mkdirs its log on construction; ATTACH
-            # is a READ and must not leave an empty-but-valid-looking
-            # table skeleton behind a typo'd LOCATION
-            raise AdtError(
-                f"ATTACH TABLE: no txnlog table at {path!r} (missing _log)"
-            )
+        readers = {"delta": DeltaLogTable, "iceberg": IcebergTable}
         v = int(version) if version is not None else None
-        df = readers[fmt.lower()](path).snapshot(self.spark, v)
+        df = readers[fmt](path).snapshot(self.spark, v)
         self.create_table(name, df)
-        self._attached[name] = {
-            "fmt": fmt.lower(), "path": path, "version": v,
-        }
+        self._attached[name] = {"fmt": fmt, "path": path, "version": v}
         return df
 
     def _ctas_lakehouse_stmt(self, m) -> DataFrame:
@@ -228,11 +218,10 @@ class Engine:
         from algebraicdb_spark.operators.iceberg_writer import (
             IcebergTableWriter,
         )
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
 
         from algebraicdb_spark.dialect import _split_top_level
 
-        name, fmt, path = m.group("name"), m.group("fmt").lower(), m.group("path")
+        name, fmt, path = m.group("name"), _table_format(m), m.group("path")
         # top-level split: iceberg transform calls carry commas of
         # their own (bucket(4, k))
         parts = [
@@ -259,10 +248,7 @@ class Engine:
             except (ValueError, NotImplementedError) as exc:
                 raise AdtError(f"CREATE TABLE {name}: {exc}") from exc
         else:
-            w = (
-                DeltaTableWriter(path) if fmt == "delta"
-                else TxnLogTable(path)
-            )
+            w = DeltaTableWriter(path)
             if w.latest_version() >= 0:
                 raise AdtError(
                     f"CREATE TABLE {name}: {path!r} already holds a "
@@ -278,8 +264,8 @@ class Engine:
     def _maintain_attached(self, name: str, op: str, **kw) -> DataFrame | None:
         """OPTIMIZE TABLE / VACUUM / REFRESH TABLE over an ATTACHed
         table. Maintenance WRITES, so it runs on the formats this
-        engine can write — all three since late round 11: txnlog
-        (`TxnLogTable`), standard Delta (`DeltaTableWriter` —
+        engine can write — both since late round 11: Delta
+        (`DeltaTableWriter` —
         compaction AND `ZORDER BY` re-clustering commit `dataChange:
         false` removes+adds other Delta engines understand and
         skip-scan), and standard Iceberg (`IcebergTableWriter` —
@@ -289,7 +275,6 @@ class Engine:
         though content didn't). REFRESH just re-resolves the snapshot
         to pick up new commits."""
         from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
 
         if name not in self._attached:
             raise AdtError(
@@ -325,7 +310,7 @@ class Engine:
                 "fmt": fmt, "path": path, "version": None,
             }
             return df
-        t = DeltaTableWriter(path) if fmt == "delta" else TxnLogTable(path)
+        t = DeltaTableWriter(path)
         if op == "optimize":
             t.optimize(self.spark, **kw)
         else:
@@ -430,7 +415,7 @@ class Engine:
         if _ATTACH_TABLE_RE.match(stmt):
             m = _ATTACH_TABLE_RE.match(stmt)
             return self._attach_table_stmt(
-                m.group("name"), m.group("fmt"), m.group("path"),
+                m.group("name"), _table_format(m), m.group("path"),
                 m.group("version"),
             )
         if _OPTIMIZE_TABLE_RE.match(stmt):
@@ -752,9 +737,9 @@ class Engine:
         """RESTORE TABLE n TO VERSION AS OF v / TO TIMESTAMP AS OF 'ts'
         — rollback an ATTACHed table to an earlier state as ONE new
         commit, history preserved (the write-side twin of the AS-OF
-        read sugar): txnlog/delta restore by re-adding the target
+        read sugar): delta restores by re-adding the target
         version's live set (zero bytes copied — see
-        `TxnLogTable.restore` / `DeltaTableWriter.restore`), iceberg
+        `DeltaTableWriter.restore`), iceberg
         rolls the current-snapshot pointer back (metadata-only,
         `IcebergTableWriter.rollback`). Past-retention targets refuse
         through the writers' own loud errors; a VERSION-pinned
@@ -766,7 +751,6 @@ class Engine:
         from algebraicdb_spark.operators.iceberg_writer import (
             IcebergTableWriter,
         )
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
 
         self._refuse_view_mutation("RESTORE", name)
         if name not in self._attached:
@@ -785,11 +769,7 @@ class Engine:
             att, ts
         )
         fmt, path = att["fmt"], att["path"]
-        writers = {
-            "txnlog": TxnLogTable,
-            "delta": DeltaTableWriter,
-            "iceberg": IcebergTableWriter,
-        }
+        writers = {"delta": DeltaTableWriter, "iceberg": IcebergTableWriter}
         t = writers[fmt](path)
         try:
             if fmt == "iceberg":
@@ -807,7 +787,7 @@ class Engine:
     def _show_tblprops_stmt(self, name: str) -> DataFrame:
         """SHOW TBLPROPERTIES n — the properties/configuration map of
         an ATTACHed lakehouse table (iceberg properties, delta
-        configuration; txnlog has none), one (key, value) row each."""
+        configuration), one (key, value) row each."""
         from algebraicdb_spark.operators.delta_writer import (
             DeltaTableWriter,
         )
@@ -823,10 +803,8 @@ class Engine:
         att = self._attached[name]
         if att["fmt"] == "iceberg":
             props = IcebergTableWriter(att["path"]).properties()
-        elif att["fmt"] == "delta":
-            props = DeltaTableWriter(att["path"]).properties()
         else:
-            props = {}
+            props = DeltaTableWriter(att["path"]).properties()
         rows = sorted((str(k), str(v)) for k, v in props.items())
         return self.spark.createDataFrame(
             rows or [], "key string, value string"
@@ -834,15 +812,11 @@ class Engine:
 
     def _describe_history_stmt(self, name: str) -> DataFrame:
         """DESCRIBE HISTORY n — the commit/snapshot audit trail of an
-        ATTACHed lakehouse table, across all three formats: txnlog
-        (action-shape-classified operations), delta (commitInfo
-        operations), iceberg (snapshot summaries). One row per
-        surviving commit/snapshot, newest last."""
+        ATTACHed lakehouse table: delta (commitInfo operations),
+        iceberg (snapshot summaries). One row per surviving
+        commit/snapshot, newest last."""
         from algebraicdb_spark.operators.iceberg import IcebergTable
-        from algebraicdb_spark.operators.txnlog import (
-            DeltaLogTable,
-            TxnLogTable,
-        )
+        from algebraicdb_spark.operators.txnlog import DeltaLogTable
 
         if name not in self._attached:
             raise AdtError(
@@ -851,17 +825,6 @@ class Engine:
             )
         att = self._attached[name]
         fmt, path = att["fmt"], att["path"]
-        if fmt == "txnlog":
-            rows = [
-                (h["version"], h["operation"], h["n_adds"],
-                 h["n_removes"], h["data_change"])
-                for h in TxnLogTable(path).history()
-            ]
-            return self.spark.createDataFrame(
-                rows or [],
-                "version long, operation string, n_adds int, "
-                "n_removes int, data_change boolean",
-            )
         if fmt == "delta":
             rows = [
                 (h["version"], h["operation"])
@@ -1004,7 +967,6 @@ class Engine:
         overwrite-shaped operation; DEFAULT backfill refuses too (it
         rewrites every row — ADD without DEFAULT, then UPDATE)."""
         from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
 
         att = self._attached[name]
         sp = re.fullmatch(
@@ -1036,12 +998,6 @@ class Engine:
                        else "")
                 )
             props = dict(pairs)
-            if att["fmt"] == "txnlog":
-                raise AdtError(
-                    f"ALTER TABLE {name}: txnlog tables have no "
-                    "properties surface — the knobs are writer "
-                    "arguments (stats_cols, zorder_by, retention)"
-                )
             try:
                 if att["fmt"] == "iceberg":
                     from algebraicdb_spark.operators.iceberg_writer import (
@@ -1073,12 +1029,6 @@ class Engine:
         if re.fullmatch(
             r"ENABLE\s+DELETION\s+VECTORS", action, re.IGNORECASE
         ):
-            if att["fmt"] != "delta":
-                raise AdtError(
-                    f"ALTER TABLE {name}: deletion vectors are a Delta "
-                    f"protocol feature — {att['fmt']} tables delete "
-                    "copy-on-write"
-                )
             DeltaTableWriter(att["path"]).enable_deletion_vectors()
             return None
         am = _ALTER_ADD_RE.match(action)
@@ -1102,13 +1052,10 @@ class Engine:
                 f"the {tname} declaration; add a struct column via the "
                 "owning writer instead"
             )
-        t = (
-            DeltaTableWriter(att["path"])
-            if att["fmt"] == "delta"
-            else TxnLogTable(att["path"])
-        )
         try:
-            t.evolve_add_column(col, spark_type(tname))
+            DeltaTableWriter(att["path"]).evolve_add_column(
+                col, spark_type(tname)
+            )
         except ValueError as exc:
             raise AdtError(f"ALTER TABLE {name}: {exc}") from exc
         self._attach_table_stmt(name, att["fmt"], att["path"], None)
@@ -1166,8 +1113,7 @@ class Engine:
         next REFRESH would discard the appended rows.
 
         On an ATTACHed lakehouse table the batch becomes a REAL append
-        commit (txnlog via ``TxnLogTable.append``, standard Delta via
-        ``DeltaTableWriter.append``, Iceberg via
+        commit (Delta via ``DeltaTableWriter.append``, Iceberg via
         ``IcebergTableWriter.append`` — all behind their schema
         gates), never a view union that ``REFRESH TABLE`` would
         silently revert (the round-10 verdict's found defect).
@@ -1197,7 +1143,6 @@ class Engine:
             from algebraicdb_spark.operators.iceberg_writer import (
                 IcebergTableWriter,
             )
-            from algebraicdb_spark.operators.txnlog import TxnLogTable
 
             att = self._attached[name]
             if att["version"] is not None:
@@ -1206,9 +1151,7 @@ class Engine:
                     "— re-ATTACH at latest before appending"
                 )
             writers = {
-                "delta": DeltaTableWriter,
-                "iceberg": IcebergTableWriter,
-                "txnlog": TxnLogTable,
+                "delta": DeltaTableWriter, "iceberg": IcebergTableWriter,
             }
             try:
                 writers[att["fmt"]](att["path"]).append(batch)
@@ -1242,7 +1185,6 @@ class Engine:
             from algebraicdb_spark.operators.iceberg_writer import (
                 IcebergTableWriter,
             )
-            from algebraicdb_spark.operators.txnlog import TxnLogTable
 
             att = self._attached[name]
             if att["version"] is not None:
@@ -1259,9 +1201,7 @@ class Engine:
                 ]
             )
             writers = {
-                "delta": DeltaTableWriter,
-                "iceberg": IcebergTableWriter,
-                "txnlog": TxnLogTable,
+                "delta": DeltaTableWriter, "iceberg": IcebergTableWriter,
             }
             try:
                 writers[att["fmt"]](att["path"]).append(typed)
@@ -1293,14 +1233,13 @@ class Engine:
         every join match instead — deduplicate the source on the
         merge key first.
 
-        On an ATTACHed txnlog table the statement routes to
-        ``TxnLogTable.merge`` — ONE transactional copy-on-write commit
+        On an ATTACHed table the statement routes to the format
+        writer's ``merge`` — ONE transactional copy-on-write commit
         (remove affected files + add rewrites/inserts, atomic,
         time-travelable) instead of a view swap that ``REFRESH TABLE``
         would silently revert (the round-10 verdict's found defect);
-        there multi-matching source rows ARE an error. Delta/iceberg
-        interop and VERSION-pinned attachments refuse loudly, exactly
-        like DELETE/UPDATE."""
+        there multi-matching source rows ARE an error. VERSION-pinned
+        attachments refuse loudly, exactly like DELETE/UPDATE."""
         m = _MERGE_RE.match(stmt)
         target, source = m.group("target"), m.group("source")
         self._refuse_view_mutation("MERGE INTO", target)
@@ -1417,7 +1356,7 @@ class Engine:
         statement with the same (app, version) no-ops. The same
         refusal matrix as the Python path applies — duplicate keys in
         the source, partitioned/format-v1 targets, schema drift all
-        refuse loudly. Iceberg attachments only: txnlog/delta express
+        refuse loudly. Iceberg attachments only: delta expresses
         keyed upserts through MERGE INTO (which probes), and dialect
         temp views have no delete files to ride."""
         m = _UPSERT_RE.match(stmt)
@@ -1465,8 +1404,8 @@ class Engine:
 
     def _mutable_attachment(self, verb: str, name: str):
         """The writable table object behind an ATTACHed name, for
-        row-level mutation: txnlog → ``TxnLogTable``, standard Delta →
-        ``DeltaTableWriter``, standard Iceberg → ``IcebergTableWriter``
+        row-level mutation: Delta → ``DeltaTableWriter``, Iceberg →
+        ``IcebergTableWriter``
         (delta graduated from mutation-refusing in round 11; iceberg's
         COW delete/update/merge landed later the same round,
         completing the three-format mutation matrix). A
@@ -1476,7 +1415,6 @@ class Engine:
         from algebraicdb_spark.operators.iceberg_writer import (
             IcebergTableWriter,
         )
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
 
         att = self._attached[name]
         if att["fmt"] == "iceberg" and verb not in (
@@ -1495,24 +1433,16 @@ class Engine:
             )
         if att["fmt"] == "iceberg":
             return IcebergTableWriter(att["path"])
-        if att["fmt"] == "delta":
-            return DeltaTableWriter(att["path"])
-        return TxnLogTable(att["path"])
+        return DeltaTableWriter(att["path"])
 
     def _reattach_after_mutation(self, name: str, t) -> None:
         """Re-register the view on the post-mutation snapshot. A table
         whose every row was deleted has NO live files — legal state:
         register an empty frame under the pinned table schema (or,
-        for a pre-schema-tracking log, under the shape the view had
+        for a log without a schema, under the shape the view had
         before the mutation — the best remaining authority)."""
-        import json as _json
-
-        from pyspark.sql.types import StructType
-
         att = self._attached[name]
         schema = t.table_schema()
-        if isinstance(schema, str):  # txnlog serializes; delta returns
-            schema = StructType.fromJson(_json.loads(schema))
         try:
             non_empty = bool(t.live_paths())
         except (NotImplementedError, ValueError):
@@ -1535,8 +1465,8 @@ class Engine:
         self._invalidate_stats(name)
 
     def _delete_stmt(self, stmt: str) -> None:
-        """DELETE FROM t [WHERE pred] — on an ATTACHed txnlog table this
-        is COPY-ON-WRITE row deletion (only files containing matching
+        """DELETE FROM t [WHERE pred] — on an ATTACHed table this is
+        COPY-ON-WRITE row deletion (only files containing matching
         rows are rewritten; the commit is remove+add, atomic,
         time-travelable); on a dialect table it lowers to a filtered
         view replacement (patterns allowed in the predicate)."""
@@ -1569,8 +1499,8 @@ class Engine:
         self._invalidate_stats(name)
 
     def _update_stmt(self, stmt: str) -> None:
-        """UPDATE t SET c = e, … [WHERE pred] — on an ATTACHed txnlog
-        table this is COPY-ON-WRITE row update (matched files rewritten
+        """UPDATE t SET c = e, … [WHERE pred] — on an ATTACHed table
+        this is COPY-ON-WRITE row update (matched files rewritten
         with CASE per assigned column, atomic remove+add commit); on a
         dialect table it lowers to a projected view replacement."""
         m = _UPDATE_RE.match(stmt)
@@ -1705,8 +1635,8 @@ class Engine:
     def _version_at_timestamp(self, att: dict, ts: str) -> int:
         """Resolve `FOR TIMESTAMP AS OF '<ts>'` to a version/snapshot
         id: the LATEST commit at or before the instant, per format —
-        txnlog uses commit-file mtimes, delta the commitInfo timestamp
-        (file mtime when a foreign commit omits it), iceberg the
+        delta the commitInfo timestamp (file mtime when a foreign
+        commit omits it), iceberg the
         snapshot's timestamp-ms. Naive literals are read as UTC (commit
         clocks are epoch-based). Below the surviving log (cleaned
         prefix / expired snapshots) or before the first commit, refuse
@@ -1715,10 +1645,7 @@ class Engine:
         from datetime import datetime, timezone
 
         from algebraicdb_spark.operators.iceberg import IcebergTable
-        from algebraicdb_spark.operators.txnlog import (
-            DeltaLogTable,
-            TxnLogTable,
-        )
+        from algebraicdb_spark.operators.txnlog import DeltaLogTable
 
         try:
             dt = datetime.fromisoformat(ts)
@@ -1732,16 +1659,7 @@ class Engine:
         ts_ms = int(dt.timestamp() * 1000)
         fmt, path = att["fmt"], att["path"]
         cands: list[tuple[int, int]] = []  # (commit ts ms, version)
-        if fmt == "txnlog":
-            t = TxnLogTable(path)
-            for commit in t._commits():
-                cf = os.path.join(
-                    t.log_dir, f"v{commit['version']:08d}.json"
-                )
-                cands.append(
-                    (int(os.path.getmtime(cf) * 1000), commit["version"])
-                )
-        elif fmt == "delta":
+        if fmt == "delta":
             d = DeltaLogTable(path)
             for v, actions in d._json_commit_actions(
                 (d._json_versions() or [0])[0], None
@@ -1810,20 +1728,13 @@ class Engine:
             _unmask_strings,
         )
         from algebraicdb_spark.operators.iceberg import IcebergTable
-        from algebraicdb_spark.operators.txnlog import (
-            DeltaLogTable,
-            TxnLogTable,
-        )
+        from algebraicdb_spark.operators.txnlog import DeltaLogTable
 
         masked, saved = _mask_strings(stmt)
         if not _TIME_TRAVEL_RE.search(masked):
             return stmt
 
-        readers = {
-            "txnlog": TxnLogTable,
-            "delta": DeltaLogTable,
-            "iceberg": IcebergTable,
-        }
+        readers = {"delta": DeltaLogTable, "iceberg": IcebergTable}
 
         def repl(m: re.Match) -> str:
             name = m.group("name")
@@ -1860,7 +1771,7 @@ class Engine:
     def _rewrite_changes(self, stmt: str) -> str:
         """Lower ``CHANGES(t, <since> [, <to>])`` in FROM position on
         an ATTACHed table to the format's row-level change feed
-        (``changes_cdf`` — txnlog/delta by version, iceberg by
+        (``changes_cdf`` — delta by version, iceberg by
         snapshot id), registered as a temp view and substituted in
         place, so the feed composes with the whole read grammar
         (joins, aggregation, CTAS, EXPLAIN). Bounds are integers or
@@ -1875,20 +1786,13 @@ class Engine:
             _unmask_strings,
         )
         from algebraicdb_spark.operators.iceberg import IcebergTable
-        from algebraicdb_spark.operators.txnlog import (
-            DeltaLogTable,
-            TxnLogTable,
-        )
+        from algebraicdb_spark.operators.txnlog import DeltaLogTable
 
         masked, saved = _mask_strings(stmt)
         if not _CHANGES_RE.search(masked):
             return stmt
 
-        readers = {
-            "txnlog": TxnLogTable,
-            "delta": DeltaLogTable,
-            "iceberg": IcebergTable,
-        }
+        readers = {"delta": DeltaLogTable, "iceberg": IcebergTable}
 
         def bound(num: str | None, ref: str | None, att: dict):
             if num is not None:

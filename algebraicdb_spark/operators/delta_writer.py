@@ -1,10 +1,10 @@
-"""Standard-format Delta Lake WRITER — the interop twin of
-``DeltaLogTable`` (txnlog.py), which round 9 proved can *read* tables
-other systems maintain. This module closes the opposite gap the
-round-9 verdict ranked first: a table built by THIS engine was, until
-now, recorded in ``TxnLogTable``'s simplified private log, so no other
-engine could consume it. ``DeltaTableWriter`` emits a real
-``_delta_log`` per the public protocol spec
+"""Standard-format Delta Lake WRITER — the write half of the engine's
+one transactional table core; ``DeltaLogTable`` (txnlog.py) is the
+read half, and reads tables other systems maintain as well as ours.
+Every table this engine writes outside Iceberg — the dialect's
+``delta`` format and its second name ``txnlog`` — goes through
+``DeltaTableWriter``, so any other Delta engine can consume it. It
+emits a real ``_delta_log`` per the public protocol spec
 (https://github.com/delta-io/delta/blob/master/PROTOCOL.md):
 
 - one NDJSON commit file per version, 20-digit zero-padded names, one
@@ -22,8 +22,8 @@ engine could consume it. ``DeltaTableWriter`` emits a real
 - OVERWRITE emits data-changing ``remove`` tombstones for the replaced
   live set plus the new adds, atomically in one commit;
 - additive schema evolution re-emits ``metaData`` in the same commit,
-  behind the same loud gate as ``TxnLogTable`` (drift without
-  ``evolve_schema=True``, column removal, or retyping refuses);
+  behind a loud gate (drift without ``evolve_schema=True``, column
+  removal, or retyping refuses);
 - ``write_checkpoint`` materializes the folded state as a classic
   single-file ``<v>.checkpoint.parquet`` (one action per row, struct
   columns) plus the ``_last_checkpoint`` pointer, optionally cleaning
@@ -35,7 +35,7 @@ Concurrency is Delta's own: the commit publish is a create-exclusive
 write of the next version file; a racing writer loses with
 ``ConcurrentWriteError`` and rebases (on S3-class stores real
 deployments route this through a commit service / conditional put —
-the same deployment seam as ``TxnLogTable._publish``).
+a deployment seam behind ``_publish``).
 
 Proof of interop is structural: every round-trip test reads the
 written table back through ``DeltaLogTable`` — the reader built and
@@ -157,9 +157,9 @@ class DeltaTableWriter:
     # -- commit primitives ------------------------------------------------
 
     def _publish(self, version: int, actions: list[dict]) -> None:
-        """Create-exclusive publish — the same atomicity primitive as
-        ``TxnLogTable._publish``, in Delta's on-disk dialect: NDJSON,
-        one action per line, 20-digit version names."""
+        """Create-exclusive publish — the commit's atomicity
+        primitive, in Delta's on-disk dialect: NDJSON, one action per
+        line, 20-digit version names."""
         target = os.path.join(self.log_dir, f"{version:020d}.json")
         doc = "\n".join(json.dumps(a) for a in actions) + "\n"
         try:
@@ -585,8 +585,8 @@ class DeltaTableWriter:
                 if rel_dir == ".":
                     rel = fn
                 else:
-                    # hive layout decoded by the SAME helper as the
-                    # txnlog staging path (txnlog._hive_partition_values)
+                    # hive layout decoded by the helper the iceberg
+                    # writer shares (txnlog._hive_partition_values)
                     pv = _hive_partition_values(rel_dir)
                     rel = os.path.join(rel_dir, fn)
                 if subdir:
@@ -644,8 +644,8 @@ class DeltaTableWriter:
         cur_meta: dict | None = None,
         fetched: bool = False,
     ) -> list[dict]:
-        """The ``metaData`` action this batch needs, behind the same
-        gate as ``TxnLogTable._schema_actions``: first write records,
+        """The ``metaData`` action this batch needs, behind the schema
+        gate: first write records,
         identical schema records nothing, drift refuses unless opted
         into AND purely additive. The partition spec is pinned for the
         table's lifetime on the append path (changing it scrambles
@@ -1191,6 +1191,14 @@ class DeltaTableWriter:
         return dict((meta or {}).get("configuration") or {})
 
     @staticmethod
+    def _txn_action(app_id: str, txn_version: int) -> dict:
+        """Delta's transaction-identifier action — the idempotence
+        mark ``append_txn`` / ``overwrite_txn`` commit with their data
+        and ``IncrementalAggView`` commits alone."""
+        return {"txn": {"appId": app_id, "version": txn_version,
+                        "lastUpdated": int(time.time() * 1000)}}
+
+    @staticmethod
     def _commit_info(operation: str, **params) -> dict:
         return {"commitInfo": {
             "timestamp": int(time.time() * 1000),
@@ -1295,9 +1303,8 @@ class DeltaTableWriter:
         options. A redelivered (app_id, txn_version) no-ops (returns
         None, unstaging anything it wrote). Makes the exactly-once
         streaming sink (streaming/sink.py) able to target a table every
-        other Delta engine can then consume; like
-        ``TxnLogTable.append_txn`` it INHERITS the table's partition
-        spec by default (the sink never states one).
+        other Delta engine can then consume; it INHERITS the table's
+        partition spec by default (the sink never states one).
 
         The idempotence mark and the schema gate are both validated
         against the log head read AFTER the slot resolves, and
@@ -1333,8 +1340,7 @@ class DeltaTableWriter:
             df, parts, mapping=self._cm_of(cur_meta)
         )
         tail = self._add_actions(staged) + [
-            {"txn": {"appId": app_id, "version": txn_version,
-                     "lastUpdated": int(time.time() * 1000)}}
+            self._txn_action(app_id, txn_version)
         ]
         try:
             for _ in range(max_retries):
@@ -1394,6 +1400,38 @@ class DeltaTableWriter:
         current spec, an explicit list — including ``[]`` —
         re-partitions), recorded via a fresh-shape ``metaData`` under
         the stable table id."""
+        return self._overwrite(df, expected_version, partition_by, [])
+
+    def overwrite_txn(
+        self,
+        df: DataFrame,
+        app_id: str,
+        txn_version: int,
+        expected_version: int,
+    ) -> int | None:
+        """Idempotent OVERWRITE — ``append_txn``'s replace twin: the
+        new content, the tombstones for the old, and the ``txn`` mark
+        ride in ONE atomic commit. A redelivered (app_id, txn_version)
+        no-ops (returns None); a stale base loses to
+        ``ConcurrentWriteError`` like any overwrite. This is what a
+        state-replacing consumer needs — ``IncrementalAggView``'s
+        refresh watermark commits atomically WITH the refreshed
+        state, so a crash can never desync the two."""
+        if txn_version <= self.reader().last_txn_version(app_id):
+            return None
+        return self._overwrite(
+            df, expected_version, None,
+            [self._txn_action(app_id, txn_version)],
+        )
+
+    def _overwrite(
+        self,
+        df: DataFrame,
+        expected_version: int,
+        partition_by: list[str] | None,
+        tail: list[dict],
+    ) -> int:
+        """``overwrite`` with ``tail`` actions riding in the same commit."""
         current = self.latest_version()
         if expected_version != current + 1:
             raise ConcurrentWriteError(
@@ -1498,7 +1536,8 @@ class DeltaTableWriter:
                 head + meta
                 + [self._commit_info("WRITE", mode="Overwrite")]
                 + removes
-                + self._add_actions(staged),
+                + self._add_actions(staged)
+                + tail,
             )
         except ConcurrentWriteError:
             # the error tells the caller to rebase and retry — the
@@ -1928,8 +1967,8 @@ class DeltaTableWriter:
         """Row-level ``DELETE FROM … WHERE predicate`` on the STANDARD
         format, two physical strategies behind one semantic:
 
-        - ``cow`` (copy-on-write): the same three file classes as
-          ``TxnLogTable.delete`` from one probe + footer counts:
+        - ``cow`` (copy-on-write): three file classes from one probe
+          + footer counts:
           untouched files keep their add entries, fully-matching files
           drop with zero rewrite I/O, partial files rewrite minus the
           matches (NULL keeps the row — SQL DELETE semantics). The
@@ -2569,12 +2608,12 @@ class DeltaTableWriter:
         dv_inline_threshold: int = 512,
     ) -> dict:
         """``MERGE INTO`` as ONE copy-on-write commit on the standard
-        format — the same plan as ``TxnLogTable.merge`` (probe
-        semi-join → rewrite only reached files → anti-join inserts →
-        atomic remove+add), with the same free multi-match refusal
-        (a matched rewrite preserves row count; staged footers
-        disagreeing with input footers IS the multi-match signal) and
-        the same ``delete_matched`` WHEN MATCHED THEN DELETE clause
+        format (probe semi-join → rewrite only reached files →
+        anti-join inserts → atomic remove+add), with a free
+        multi-match refusal (a matched rewrite preserves row count;
+        staged footers disagreeing with input footers IS the
+        multi-match signal) and a ``delete_matched`` WHEN MATCHED THEN
+        DELETE clause
         (fully-matching files drop without rewrite I/O; partial files
         rewrite via LEFT ANTI)."""
         from pyspark.sql import functions as F
@@ -3054,16 +3093,16 @@ class DeltaTableWriter:
         removal of an input aborts. Returns the new version, or None
         below ``min_inputs``.
 
-        ``zorder_by`` re-CLUSTERS instead of just re-packing — the
-        same Morton-key range clustering as ``TxnLogTable.optimize``
-        (txnlog._zorder_clustered), landing in a STANDARD table other
-        Delta engines then skip-scan: each output file covers a narrow
+        ``zorder_by`` re-CLUSTERS instead of just re-packing — a
+        Morton-key range clustering (txnlog._zorder_clustered),
+        landing in a STANDARD table other Delta engines then
+        skip-scan: each output file covers a narrow
         span of every clustering column, and since delta adds are
         file-grain with footer stats by construction, the narrow spans
         reach the log for free. Legitimate on a single input
         (clustering changes layout value even at one file);
-        hive-partitioned tables refuse, as in txnlog — the partition
-        layout already provides the coarse tier."""
+        hive-partitioned tables refuse — the partition layout
+        already provides the coarse tier."""
         from algebraicdb_spark.operators.txnlog import _zorder_clustered
 
         rdr = self.reader()
@@ -3171,8 +3210,8 @@ class DeltaTableWriter:
     def vacuum(self, retain_versions: int = 2) -> list[str]:
         """Physically delete data files the LOG references but no
         snapshot in the last ``retain_versions`` versions reaches —
-        retention stated in versions (the fixture has no wall-clock),
-        like ``TxnLogTable.vacuum``; real Delta states it in hours off
+        retention stated in versions (the fixture has no wall-clock);
+        real Delta states it in hours off
         the remove tombstones' deletionTimestamp, same contract. The
         log is never deleted (history structure stays auditable); AS
         OF reads older than retention fail on the missing files, which

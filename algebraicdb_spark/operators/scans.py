@@ -787,12 +787,12 @@ def source_txnlog_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         (2, "add", f"{base}/f0_v2"),
     ]
     log = spark.createDataFrame(actions, "version int, action string, path string")
-    log.write.mode("overwrite").json(f"{base}/_log")
+    log.write.mode("overwrite").json(f"{base}/actions")
     # snapshot resolution: latest action per path wins
     from pyspark.sql.window import Window
 
     replay = (
-        spark.read.json(f"{base}/_log")
+        spark.read.json(f"{base}/actions")
         .withColumn(
             "rn",
             F.row_number().over(

@@ -719,16 +719,15 @@ class TestDeltaWriterRoundTrip:
 
     def test_describe_history_across_formats(self, spark, tables, tmp_path):
         """DESCRIBE HISTORY n from the dialect: the audit trail of an
-        attached table — txnlog operations classified from action
-        shape, delta from commitInfo; non-attached names refuse."""
+        attached table — delta operations from commitInfo (``txnlog``
+        names the same format); non-attached names refuse."""
         import pytest as _pytest
 
         from algebraicdb_spark.engine import AdtError, Engine
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
 
         eng = Engine(spark)
-        # txnlog: append → append → optimize → delete
-        t = TxnLogTable(str(tmp_path / "tl"))
+        # attached FROM txnlog: append → append → optimize → delete
+        t = DeltaTableWriter(str(tmp_path / "tl"))
         t.append(spark.createDataFrame([(1, "a"), (2, "b")],
                                        "id long, tag string"))
         t.append(spark.createDataFrame([(3, "a")], "id long, tag string"))
@@ -737,11 +736,8 @@ class TestDeltaWriterRoundTrip:
         eng.sql(f"ATTACH TABLE tl FROM txnlog LOCATION '{t.path}'")
         hist = eng.sql("DESCRIBE HISTORY tl").collect()
         assert [(h["version"], h["operation"]) for h in hist] == [
-            # the COW delete RECORDS its operation since round 11 —
-            # shape inference alone would have said REPLACE
-            (0, "APPEND"), (1, "APPEND"), (2, "OPTIMIZE"), (3, "DELETE"),
+            (0, "WRITE"), (1, "WRITE"), (2, "OPTIMIZE"), (3, "DELETE"),
         ]
-        assert hist[2]["data_change"] is False
         # delta: the writer's commitInfo operations surface
         droot = str(tmp_path / "d")
         w = DeltaTableWriter(droot)
@@ -1050,8 +1046,7 @@ class TestDeletionVectorWrites:
     def test_sql_enable_and_mor_delete_on_attachment(
         self, spark, tmp_path
     ):
-        from algebraicdb_spark.engine import AdtError, Engine
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
+        from algebraicdb_spark.engine import Engine
 
         w = self._table(spark, tmp_path)
         eng = Engine(spark)
@@ -1065,12 +1060,13 @@ class TestDeletionVectorWrites:
         assert sorted(
             res for _raw, res, _pv, _dv in t._live_entries_full()
         ) == sorted(t.live_paths(as_of=2))
-        # txnlog attachments have no DV protocol — refuse
-        tl = TxnLogTable(str(tmp_path / "tl"))
+        # a txnlog attachment IS a Delta table: the same upgrade applies
+        tl = DeltaTableWriter(str(tmp_path / "tl"))
         tl.append(spark.createDataFrame([(1,)], "k long"))
         eng.sql(f"ATTACH TABLE tl FROM txnlog LOCATION '{tl.path}'")
-        with pytest.raises(AdtError, match="Delta protocol feature"):
-            eng.sql("ALTER TABLE tl ENABLE DELETION VECTORS")
+        eng.sql("ALTER TABLE tl ENABLE DELETION VECTORS")
+        proto, _meta = tl.reader()._protocol_meta()
+        assert "deletionVectors" in proto["writerFeatures"]
 
 
 class TestRowLevelCdfAcrossDvFlips:
@@ -1438,9 +1434,8 @@ class TestDeltaRestore:
 class TestDeltaDataSkipping:
     """Two-tier log-level pruning over a STANDARD Delta table —
     partition values first, then the add actions' recorded min/max
-    stats: the same skipping TxnLogTable has, now on tables any Delta
-    engine wrote (our writer records spec-shaped stats, so its own
-    output skips too)."""
+    stats, on tables any Delta engine wrote (our writer records
+    spec-shaped stats, so its own output skips too)."""
 
     def test_skip_prunes_files_and_rows_match(self, spark, tmp_path):
         root = str(tmp_path / "t")

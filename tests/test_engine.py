@@ -147,24 +147,32 @@ class TestAttachTable:
         dance — and composes with joins and qualified references. A
         version below retention and a timestamp before the first
         commit refuse loudly."""
+        import json as _json
         import os as _os
 
         import pytest as _pytest
 
         from algebraicdb_spark.engine import Engine
         from algebraicdb_spark.functions.adt import AdtError
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
+        from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
 
-        t = TxnLogTable(str(tmp_path / "t"))
+        t = DeltaTableWriter(str(tmp_path / "t"))
         r = tables["region"]
         t.append(r.limit(2))
         t.append(r.limit(5))
         t.append(r.limit(1))
         # pin deterministic commit clocks for the timestamp resolution
+        # through each commit's commitInfo.timestamp (epoch ms)
         base = 1_600_000_000  # epoch seconds
         for v in range(3):
-            cf = _os.path.join(t.log_dir, f"v{v:08d}.json")
-            _os.utime(cf, (base + 100 * v, base + 100 * v))
+            cf = _os.path.join(t.log_dir, f"{v:020d}.json")
+            with open(cf) as f:
+                actions = [_json.loads(line) for line in f if line.strip()]
+            for a in actions:
+                if "commitInfo" in a:
+                    a["commitInfo"]["timestamp"] = (base + 100 * v) * 1000
+            with open(cf, "w") as f:
+                f.write("".join(_json.dumps(a) + "\n" for a in actions))
         eng = Engine(spark)
         eng.sql(f"ATTACH TABLE reg FROM txnlog LOCATION '{t.path}'")
         assert eng.sql(
@@ -213,9 +221,9 @@ class TestAttachTable:
 
         from algebraicdb_spark.engine import Engine
         from algebraicdb_spark.functions.adt import AdtError
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
+        from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
 
-        t = TxnLogTable(str(tmp_path / "t"))
+        t = DeltaTableWriter(str(tmp_path / "t"))
         t.append(tables["region"].limit(2))
         t.append(tables["region"].limit(5))
         eng = Engine(spark)
@@ -242,9 +250,8 @@ class TestAttachTable:
         """ALTER TABLE … SET PROPERTIES / SHOW TBLPROPERTIES — the
         formats' own knob surface from SQL: flipping iceberg's
         write.delete.mode makes the next DELETE merge-on-read, delta's
-        enableDeletionVectors routes through the protocol upgrade,
-        capability keys this writer cannot uphold refuse, and txnlog
-        (no properties surface) refuses SET but answers SHOW empty."""
+        enableDeletionVectors routes through the protocol upgrade, and
+        capability keys this writer cannot uphold refuse."""
         import pytest as _pytest
 
         from algebraicdb_spark.engine import Engine
@@ -256,7 +263,6 @@ class TestAttachTable:
         from algebraicdb_spark.operators.iceberg_writer import (
             IcebergTableWriter,
         )
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
 
         eng = Engine(spark)
         iw = IcebergTableWriter(str(tmp_path / "i"))
@@ -334,13 +340,6 @@ class TestAttachTable:
         )
         with _pytest.raises(AdtError, match="append-only"):
             eng.sql("DELETE FROM dl WHERE r_regionkey = 0")
-        # txnlog: no properties surface
-        t = TxnLogTable(str(tmp_path / "t"))
-        t.append(tables["region"].limit(2))
-        eng.sql(f"ATTACH TABLE tl FROM txnlog LOCATION '{t.path}'")
-        with _pytest.raises(AdtError, match="no.*properties"):
-            eng.sql("ALTER TABLE tl SET PROPERTIES ('x' = 'y')")
-        assert eng.sql("SHOW TBLPROPERTIES tl").count() == 0
 
     def test_restore_to_an_empty_version(self, spark, tables, tmp_path):
         """RESTORE to a version whose live set is EMPTY (everything
@@ -348,9 +347,9 @@ class TestAttachTable:
         empty frame under the pinned schema — not a post-commit crash
         leaving a stale view."""
         from algebraicdb_spark.engine import Engine
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
+        from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
 
-        t = TxnLogTable(str(tmp_path / "t"))
+        t = DeltaTableWriter(str(tmp_path / "t"))
         t.append(tables["region"].limit(2))     # v0
         t.delete(spark, "TRUE")                 # v1: empty live set
         t.append(tables["region"].limit(5))     # v2
@@ -404,7 +403,7 @@ class TestAttachTable:
         table) nor be rewritten — while a REAL travel clause in the
         same statement still lowers (string-masked matching)."""
         from algebraicdb_spark.engine import Engine
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
+        from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
 
         eng = Engine(spark)
         # no attachment at all: the literal alone must pass through
@@ -416,7 +415,7 @@ class TestAttachTable:
             "SELECT 'x FOR TIMESTAMP AS OF ''2024-01-01''' AS note"
         ).collect()
         # literal + real clause in ONE statement: only the clause lowers
-        t = TxnLogTable(str(tmp_path / "t"))
+        t = DeltaTableWriter(str(tmp_path / "t"))
         t.append(tables["region"].limit(2))
         t.append(tables["region"].limit(5))
         eng.sql(f"ATTACH TABLE reg FROM txnlog LOCATION '{t.path}'")
@@ -463,9 +462,9 @@ class TestAttachTable:
         self, spark, tables, tmp_path
     ):
         from algebraicdb_spark.engine import Engine
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
+        from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
 
-        t = TxnLogTable(str(tmp_path / "t"))
+        t = DeltaTableWriter(str(tmp_path / "t"))
         r = tables["region"]
         t.append(r.limit(2))
         t.append(r.limit(5))
@@ -531,9 +530,9 @@ class TestAttachTable:
 
         from algebraicdb_spark.engine import Engine
         from algebraicdb_spark.functions.adt import AdtError
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
+        from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
 
-        t = TxnLogTable(str(tmp_path / "m"))
+        t = DeltaTableWriter(str(tmp_path / "m"))
         r = tables["region"]
         for _ in range(3):
             t.append(r)
@@ -542,7 +541,7 @@ class TestAttachTable:
         n = 3 * r.count()
         assert eng.sql("SELECT COUNT(*) AS n FROM reg").collect()[0]["n"] == n
         eng.sql("OPTIMIZE TABLE reg ZORDER BY (r_regionkey)")
-        assert len(t.live_paths()) < 3  # compacted (file-grain dirs ≤ target)
+        assert len(t.live_paths()) < 3  # compacted (files ≤ target)
         assert eng.sql("SELECT COUNT(*) AS n FROM reg").collect()[0]["n"] == n
         # new commits appear after REFRESH, not before
         t.append(r.limit(1))
@@ -576,9 +575,9 @@ class TestAttachTable:
 
         from algebraicdb_spark.engine import Engine
         from algebraicdb_spark.functions.adt import AdtError
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
+        from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
 
-        t = TxnLogTable(str(tmp_path / "ct"))
+        t = DeltaTableWriter(str(tmp_path / "ct"))
         r = tables["region"]
         t.append(r.limit(2))
         t.append(r.limit(5))
@@ -618,13 +617,36 @@ class TestCtasLakehouse:
     into a REAL lakehouse table (committed via the format writer, then
     attached), transactional from commit zero."""
 
+    def test_ctas_from_txnlog_writes_a_delta_table(
+        self, spark, tables, tmp_path
+    ):
+        """``txnlog`` is the dialect's second name for ``delta``: the
+        CTAS lands a standard ``_delta_log/`` (no private ``_log/``),
+        and ATTACH FROM delta on the same location reads the same rows."""
+        import os
+
+        from algebraicdb_spark.engine import Engine
+
+        eng = Engine(spark)
+        eng.create_table("reg_src", tables["region"])
+        root = str(tmp_path / "t")
+        eng.sql(
+            f"CREATE TABLE ctl FROM txnlog LOCATION '{root}' AS "
+            "SELECT r_regionkey, r_name FROM reg_src"
+        )
+        assert os.path.isdir(os.path.join(root, "_delta_log"))
+        assert not os.path.exists(os.path.join(root, "_log"))
+        eng.sql(f"ATTACH TABLE cdl FROM delta LOCATION '{root}'")
+        want = eng.sql("SELECT * FROM ctl")
+        got = eng.sql("SELECT * FROM cdl")
+        assert got.count() == 5
+        assert want.exceptAll(got).count() == 0
+        assert got.exceptAll(want).count() == 0
+
     def test_ctas_all_three_formats(self, spark, tables, tmp_path):
         from algebraicdb_spark.engine import Engine
         from algebraicdb_spark.operators.iceberg import IcebergTable
-        from algebraicdb_spark.operators.txnlog import (
-            DeltaLogTable,
-            TxnLogTable,
-        )
+        from algebraicdb_spark.operators.txnlog import DeltaLogTable
 
         eng = Engine(spark)
         eng.create_table("reg_src", tables["region"])
@@ -657,12 +679,12 @@ class TestCtasLakehouse:
             "PARTITION BY (r_regionkey) AS "
             "SELECT r_regionkey, r_name FROM reg_src"
         )
-        tl = TxnLogTable(troot)
+        tl = DeltaLogTable(troot)
         assert tl.snapshot(spark).count() == 5
         # the partition SPEC committed with the CTAS — values live in
         # the log's add actions, pruning works from commit zero
-        _schema, tparts = tl._meta_at()
-        assert tparts == ["r_regionkey"]
+        _proto, tmeta = tl._protocol_meta()
+        assert tmeta["partitionColumns"] == ["r_regionkey"]
         assert len(tl.live_paths(skip=[("r_regionkey", 2, 2)])) < len(
             tl.live_paths()
         )
